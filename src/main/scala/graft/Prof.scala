@@ -364,87 +364,6 @@ object Prof {
       }
     }
 
-    if (which.contains("stagedump")) {
-      // per-stage wall/CPU/task-count dump for one fused-cascade run
-      import graft.functions.SeriesFunctions
-      import graft.operators.Partitioning
-      val (train, testAll, _) = SparkEntry.harWorkload(spark, sfDir)
-      val testSel = testAll.select(col("test_id"), col("test_series"))
-      val trainSel = train.select(col("train_id"), col("train_series"), col("label"))
-      val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val lsn = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = sc.stageInfo
-          val wall = (si.completionTime.getOrElse(0L) - si.submissionTime.getOrElse(0L)) / 1e3
-          val cpu = si.taskMetrics.executorCpuTime / 1e9
-          val rt = si.taskMetrics.executorRunTime / 1e3
-          stages.add(f"stage=${si.stageId} tasks=${si.numTasks} wall=$wall%.2f run=$rt%.2f cpu=$cpu%.2f ${si.name.take(60)}")
-        }
-      }
-      spark.sparkContext.addSparkListener(lsn)
-      def fusedCands(fk: Int, coarsen: Int): DataFrame = {
-        val spreadTest = Partitioning.spread(testSel)
-        val testSk = spreadTest.withColumn("sk", SeriesFunctions.barrier(
-          SeriesFunctions.paa(col("test_series"), coarsen)))
-        val trainArr = trainSel
-          .withColumn("tsk", SeriesFunctions.paa(col("train_series"), coarsen))
-          .select(col("train_id"), col("tsk"))
-          .agg(collect_list(struct(col("train_id"), col("tsk"))).as("tarr"))
-        testSk.crossJoin(broadcast(trainArr))
-          .select(col("test_id"), col("test_series"),
-            SeriesFunctions.barrier(SeriesFunctions.topkScan(
-              col("sk"), col("tarr"), fk, "manhattan", -1)).as("cand_ids"))
-      }
-      // warm run, then measured run with stage dump
-      noop(fusedCands(40, 8))
-      stages.clear()
-      time("q25.cands.measured", 1)(noop(fusedCands(40, 8)))
-      import scala.jdk.CollectionConverters._
-      stages.asScala.foreach(s => System.err.println(s"[prof] $s"))
-    }
-
-    if (which.contains("knnphase")) {
-      // fused-cascade phase attribution (r22): candidate scan alone, +
-      // exact phase, + full query
-      import graft.functions.SeriesFunctions
-      import graft.operators.Partitioning
-      val (train, testAll, _) = SparkEntry.harWorkload(spark, sfDir)
-      val testSel = testAll.select(col("test_id"), col("test_series"))
-      val trainSel = train.select(col("train_id"), col("train_series"), col("label"))
-      def fusedCands(fk: Int, coarsen: Int): DataFrame = {
-        val spreadTest = Partitioning.spread(testSel)
-        val testSk = spreadTest.withColumn("sk", SeriesFunctions.barrier(
-          SeriesFunctions.paa(col("test_series"), coarsen)))
-        val trainArr = trainSel
-          .withColumn("tsk", SeriesFunctions.paa(col("train_series"), coarsen))
-          .select(col("train_id"), col("tsk"))
-          .agg(collect_list(struct(col("train_id"), col("tsk"))).as("tarr"))
-        testSk.crossJoin(broadcast(trainArr))
-          .select(col("test_id"), col("test_series"),
-            SeriesFunctions.barrier(SeriesFunctions.topkScan(
-              col("sk"), col("tarr"), fk, "manhattan", -1)).as("cand_ids"))
-      }
-      def exact(c: DataFrame, band: Int): DataFrame = c
-        .select(col("test_id"), col("test_series"),
-          explode(col("cand_ids")).as("train_id"))
-        .join(broadcast(trainSel), "train_id")
-        .withColumn("dist", SeriesFunctions.barrier(
-          SeriesFunctions.dtw(col("test_series"), col("train_series"), band)))
-      time("q25.cands(fk=40,c=8)", 3)(noop(fusedCands(40, 8)))
-      time("q25.exact(band=8)", 3)(noop(exact(fusedCands(40, 8), 8)))
-      time("q26.cands(fk=16,c=8)", 3)(noop(fusedCands(16, 8)))
-      time("q26.exact(band=56)", 3)(noop(exact(fusedCands(16, 8), 56)))
-      time("q25.full", 3) {
-        SparkEntry.dropDerivedMemosExcept(spark, Set.empty)
-        noop(SparkEntry.queries("q25_knn_dtw_pruned")(spark, sfDir))
-      }
-      time("q26.full", 3) {
-        SparkEntry.dropDerivedMemosExcept(spark, Set.empty)
-        noop(SparkEntry.queries("q26_har_model2_1nn")(spark, sfDir))
-      }
-    }
-
     if (which.contains("q78stages")) {
       // stage-level attribution of one spread q78 micro-batch
       val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()

@@ -40,17 +40,6 @@ case class LabeledSeries(rowId: Long, series: Array[Double], label: Double)
   *                           the band window spans the signal range, which
   *                           makes candidate selection arbitrary
   * @param coarsenFactor      PAA block size for the "paa"/"paa_dtw" rankers
-  * @param prefilterSampleMod sampled-threshold pushdown for the ranking
-  *                           phase: score each test point against the
-  *                           ~1/mod deterministic train subsample, take
-  *                           the (candidateFactor*k)-th smallest sampled
-  *                           score as an upper bound tau on the true
-  *                           selection cutoff, and drop score > tau rows
-  *                           BEFORE the bounded-heap aggregate (same
-  *                           candidates, ~mod-fold fewer rows through
-  *                           aggregation machinery). <= 1 disables; when
-  *                           the subsample is smaller than the candidate
-  *                           budget the filter self-disables (tau = +inf)
   */
 case class KnnParams(
     k: Int = 1,
@@ -64,5 +53,4 @@ case class KnnParams(
     lbPruning: Boolean = false,
     candidateFactor: Int = 4,
     pruneRanker: String = "paa",
-    coarsenFactor: Int = 8,
-    prefilterSampleMod: Int = 16)
+    coarsenFactor: Int = 8)

@@ -52,18 +52,19 @@ object SeriesFunctions {
   def topkIds(score: Column, id: Column, k: Int): Column =
     call_function("graft_topk_ids", score, id, lit(k))
   /** The k smallest scores per group, sorted ascending — bounded-buffer
-    * order statistics (the sampled-tau pass needs the fk-th smallest
-    * without an unbounded collect_list).
+    * order statistics without an unbounded collect_list.
     */
   def topkScores(score: Column, id: Column, k: Int): Column =
     call_function("graft_topk_scores", score, id, lit(k))
-  /** Fused candidate-selection scan (see [[graft.functions.TopKScanIds]]):
-    * the ids of the k best-ranked entries of a broadcast
-    * array<struct<id, sketch>> for one test-side sketch — the
-    * broadcast-path replacement for pair-join + graft_topk_ids.
+  /** Block-scan top-k (see [[graft.functions.BlockTopK]]): the k nearest
+    * entries of a train block `array<struct<train_id, train_series, ...>>`
+    * to one test series, as `array<struct<dist, train_id, ...>>` sorted
+    * by (dist, train_id). `param` is the dtw band or fastdtw radius.
     */
-  def topkScan(sk: Column, trainArr: Column, k: Int, kind: String, band: Int): Column =
-    call_function("graft_topk_scan", sk, trainArr, lit(k), lit(kind), lit(band))
+  def blockTopK(series: Column, block: Column, k: Int, kind: String, param: Int,
+      excludeZero: Boolean): Column =
+    call_function("graft_block_topk", series, block, lit(k), lit(kind), lit(param),
+      lit(excludeZero))
   /** The k smallest (score, id) pairs per group as array<struct<score,id>>,
     * sorted ascending — ONE heap maintains both columns (two separate
     * ids+scores aggregates would insert every input row twice).

@@ -14,6 +14,10 @@ import org.apache.spark.sql.types._
 final class TopKIdsBuffer(val k: Int) {
   val scores = new Array[Double](k)
   val ids = new Array[Long](k)
+  /** A caller value riding with each entry ([[BlockScanner]]: the
+    * entry's position in its block).
+    */
+  val tags = new Array[Int](k)
   var size = 0
 
   // SQLOrderingUtil.compareDoubles: Spark's OWN sort comparator — a total
@@ -28,10 +32,12 @@ final class TopKIdsBuffer(val k: Int) {
     c > 0 || (c == 0 && i1 > i2)
   }
 
-  def insert(s: Double, id: Long): Unit = {
+  def insert(s: Double, id: Long): Unit = insert(s, id, 0)
+
+  def insert(s: Double, id: Long, tag: Int): Unit = {
     if (size < k) {
       var i = size
-      scores(i) = s; ids(i) = id
+      scores(i) = s; ids(i) = id; tags(i) = tag
       size += 1
       // sift up
       while (i > 0) {
@@ -39,12 +45,13 @@ final class TopKIdsBuffer(val k: Int) {
         if (gt(scores(i), ids(i), scores(p), ids(p))) {
           val ts = scores(i); scores(i) = scores(p); scores(p) = ts
           val ti = ids(i); ids(i) = ids(p); ids(p) = ti
+          val tt = tags(i); tags(i) = tags(p); tags(p) = tt
           i = p
         } else return
       }
     } else if (gt(scores(0), ids(0), s, id)) {
       // replace the root (current max) and sift down
-      scores(0) = s; ids(0) = id
+      scores(0) = s; ids(0) = id; tags(0) = tag
       var i = 0
       while (true) {
         val l = 2 * i + 1; val r = l + 1
@@ -54,12 +61,14 @@ final class TopKIdsBuffer(val k: Int) {
         if (m == i) return
         val ts = scores(i); scores(i) = scores(m); scores(m) = ts
         val ti = ids(i); ids(i) = ids(m); ids(m) = ti
+        val tt = tags(i); tags(i) = tags(m); tags(m) = tt
         i = m
       }
     }
   }
 
-  private def sortedIdx(): Array[Int] = {
+  /** Slot indices sorted ascending by (score, id). */
+  def sortedOrder(): Array[Int] = {
     val idx = Array.range(0, size)
     idx.sortWith { (x, y) =>
       val c = org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(scores(x), scores(y))
@@ -68,14 +77,164 @@ final class TopKIdsBuffer(val k: Int) {
   }
 
   /** ids sorted ascending by (score, id) — deterministic output order. */
-  def sortedIds(): Array[Long] = sortedIdx().map(ids(_))
+  def sortedIds(): Array[Long] = sortedOrder().map(ids(_))
 
   /** scores sorted ascending by (score, id). */
-  def sortedScores(): Array[Double] = sortedIdx().map(scores(_))
+  def sortedScores(): Array[Double] = sortedOrder().map(scores(_))
 
   /** (score, id) pairs sorted ascending by (score, id). */
   def sortedPairs(): Array[(Double, Long)] =
-    sortedIdx().map(i => (scores(i), ids(i)))
+    sortedOrder().map(i => (scores(i), ids(i)))
+}
+
+/** Block-scan top-k, the one candidate path of [[graft.operators.Knn]]:
+  * for ONE test series, score every entry of a train BLOCK —
+  * `array<struct<train_id, train_series, payload...>>` — and return the
+  * k nearest as `array<struct<dist, train_id, payload...>>`, sorted by
+  * the [[TopKIdsBuffer]] total order over (dist, train_id). `rank` is
+  * the 1-based position in that array.
+  *
+  * Same answer as the pair formulation it replaces (a per-pair distance
+  * expression + `row_number` over (dist, train_id); AggregatesSpec pins
+  * it): the scores come from the same [[Kernels]] (in-place forms,
+  * bit-identical), NaN sorts last and -0.0 ties 0.0 (Spark's own double
+  * order), a null train series or null entry is skipped (a null
+  * distance), a null test series yields null (no neighbors), a null
+  * train_id orders first, and `excludeZero` drops `dist == 0.0` exactly
+  * as the SQL predicate `dist != 0.0` does. train_id must be integral:
+  * the heap orders ids as longs, and the output keeps the input type.
+  *
+  * The block is read IN PLACE: one view per entry, no decoded copy of
+  * the block and no state that outlives the call, so nothing can be
+  * fooled by a reused row buffer. Output values own their memory
+  * (non-primitive payloads are copied), because on the partitioned path
+  * the block row can sit in a buffer that is reused for the next row.
+  */
+case class BlockTopK(
+    left: Expression,  // test series: array<double>
+    right: Expression, // block: array<struct<train_id, train_series, payload...>>
+    k: Int,
+    kind: String,      // a Knn distance, or the "lb_keogh" ranker
+    param: Int,        // band (dtw) or radius (fastdtw)
+    excludeZero: Boolean)
+    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+  require(k >= 1, "k must be >= 1")
+
+  private val kindCode: Int = BlockScanner.kinds.indexOf(kind)
+  require(kindCode >= 0, s"unknown block-scan kernel: $kind")
+
+  private def entryFields: Seq[StructField] = right.dataType match {
+    case ArrayType(StructType(fs), _) => fs.toSeq
+    case _ => Nil
+  }
+
+  override def prettyName: String = "graft_block_topk"
+  override def dataType: DataType = ArrayType(StructType(
+    StructField("dist", DoubleType, nullable = false) +: entryFields.patch(1, Nil, 1)),
+    containsNull = false)
+  override def nullIntolerant: Boolean = true
+
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+    (left.dataType, entryFields.map(_.dataType)) match {
+      case (ArrayType(DoubleType, _),
+          Seq(ByteType | ShortType | IntegerType | LongType, ArrayType(DoubleType, _), _*)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case _ => TypeCheckResult.TypeCheckFailure(s"$prettyName needs (array<double>, " +
+        "array<struct<integral id, array<double>, ...>>), got " +
+        s"(${left.dataType}, ${right.dataType})")
+    }
+  }
+
+  @transient private lazy val scanner =
+    new BlockScanner(k, kindCode, param, excludeZero, entryFields.map(_.dataType).toArray)
+
+  override def nullSafeEval(test: Any, block: Any): Any =
+    scanner.scan(test.asInstanceOf[ArrayData], block.asInstanceOf[ArrayData])
+
+  // real codegen, not CodegenFallback: a fallback inside a whole-stage
+  // project materializes its input row, copying the whole block once per
+  // test row
+  override protected def doGenCode(
+      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
+      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
+      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
+    val ref = ctx.addReferenceObj("blockScanner", scanner, classOf[BlockScanner].getName)
+    defineCodeGen(ctx, ev, (a, b) => s"$ref.scan($a, $b)")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): BlockTopK =
+    copy(left = newLeft, right = newRight)
+}
+
+object BlockScanner {
+  val kinds: Seq[String] =
+    Seq("euclidean", "sqdist", "manhattan", "cosine", "dtw", "fastdtw", "lb_keogh")
+}
+
+/** The scan body of [[BlockTopK]], shared by its interpreted and
+  * generated forms. Holds configuration only.
+  */
+final class BlockScanner(k: Int, kind: Int, param: Int, excludeZero: Boolean,
+    fieldTypes: Array[DataType]) extends Serializable {
+  private val nf = fieldTypes.length
+
+  // ids order as longs; a null id orders first, like NULLS FIRST in the
+  // ascending (dist, train_id) sort it replaces
+  private def idKey(e: InternalRow): Long =
+    if (e.isNullAt(0)) Long.MinValue
+    else fieldTypes(0) match {
+      case LongType    => e.getLong(0)
+      case IntegerType => e.getInt(0).toLong
+      case ShortType   => e.getShort(0).toLong
+      case _           => e.getByte(0).toLong
+    }
+
+  def scan(test: ArrayData, block: ArrayData): ArrayData = {
+    val a = test.toDoubleArray()
+    val na = if (kind == 3) Kernels.norm(a) else 0.0
+    val buf = new TopKIdsBuffer(k)
+    val n = block.numElements()
+    var i = 0
+    while (i < n) {
+      if (!block.isNullAt(i)) {
+        val e = block.getStruct(i, nf)
+        if (!e.isNullAt(1)) {
+          val s = e.getArray(1)
+          val d = (kind: @annotation.switch) match {
+            case 0 => Kernels.euclidean(a, s)
+            case 1 => Kernels.sqdist(a, s)
+            case 2 => Kernels.manhattan(a, s)
+            case 3 => 1.0 - Kernels.cosine(a, na, s)
+            case 4 => Kernels.dtw(a, s, param)
+            case 5 => Kernels.fastdtw(a, s.toDoubleArray(), param)
+            case _ => Kernels.lbKeogh(a, s)
+          }
+          if (!(excludeZero && d == 0.0)) buf.insert(d, idKey(e), i)
+        }
+      }
+      i += 1
+    }
+    val order = buf.sortedOrder()
+    val out = new Array[Any](order.length)
+    var j = 0
+    while (j < order.length) {
+      val e = block.getStruct(buf.tags(order(j)), nf)
+      val vals = new Array[Any](nf)
+      vals(0) = buf.scores(order(j))
+      vals(1) = if (e.isNullAt(0)) null else e.get(0, fieldTypes(0))
+      var f = 2
+      while (f < nf) {
+        vals(f) = if (e.isNullAt(f)) null else InternalRow.copyValue(e.get(f, fieldTypes(f)))
+        f += 1
+      }
+      out(j) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
+      j += 1
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+  }
 }
 
 /** Native bounded top-k-by-score aggregate: collects the ids of the k
@@ -88,186 +247,9 @@ final class TopKIdsBuffer(val k: Int) {
   * same semantics, but this one runs as a Catalyst
   * `TypedImperativeAggregate` — no Scala tuple boxing and no Kryo buffer
   * encoding per row, with partial state serialized as packed primitives.
-  * Used by the KNN prune cascade, whose candidate-selection aggregate
-  * sees millions of slim rows per query.
+  * Used by the KNN prune cascade to merge per-block candidate lists
+  * when the train side spans several blocks.
   */
-/** Fused candidate-selection scan — the broadcast-path replacement for
-  * the pair-join + [[BoundedTopKIdsAgg]] sequence in the KNN prune
-  * cascade (r22 optimization, guide §1.2 "fix the distributed algorithm
-  * first"): for ONE test-side sketch, rank EVERY train sketch with the
-  * cascade's ranking kernel and return the ids of the k smallest
-  * (score, id) pairs directly.
-  *
-  * Equivalence to the join+aggregate shape (KnnSpec pins it): the scores
-  * are computed by the SAME [[Kernels]] entry points the pair join's
-  * expressions called ([[Kernels.manhattanAD]] == manhattan over
-  * toDoubleArray, ditto dtw; lbKeogh accumulates in the same element
-  * order), and the selection is the SAME [[TopKIdsBuffer]] — a total
-  * order over (score, id), so the selected set is independent of
-  * insertion order. Null handling matches the aggregate: a null train
-  * entry (null struct, null id, or null sketch → null score in the old
-  * plan) is skipped; a null TEST sketch yields an empty array, exactly
-  * what an all-null-score group produced (and the downstream
-  * `explode(cand_ids)` drops the row either way).
-  *
-  * Why it is faster: the old shape materialized |test| x |train| joined
-  * rows through BroadcastNestedLoopJoin + per-pair projection + hash
-  * aggregation (measured ~2.5 us/pair of machinery around a ~0.1 us
-  * kernel on the HAR workload), twice when the sampled-tau prefilter ran.
-  * This expression runs the kernel in a tight loop per test row over the
-  * broadcast sketch array — and the prefilter (which exists only to
-  * bound aggregate state) becomes unnecessary: the heap here is local to
-  * one row's evaluation.
-  *
-  * The broadcast side is decoded to primitive arrays ONCE per task per
-  * thread (identity-checked on the UnsafeArrayData's base buffer — every
-  * joined row references the same broadcast bytes), the §4.5 "heavy
-  * state once per task" discipline.
-  */
-case class TopKScanIds(
-    left: Expression,  // test sketch: array<double>
-    right: Expression, // broadcast train: array<struct<id: long, sk: array<double>>>
-    k: Int,
-    kind: String, // "manhattan" | "dtw" | "lb_keogh"
-    band: Int)    // coarse band for kind = "dtw" (-1 = unconstrained)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  require(k >= 1, "k must be >= 1")
-
-  private val kindCode: Int = kind match {
-    case "manhattan" => 0
-    case "dtw"       => 1
-    case "lb_keogh"  => 2
-    case other => throw new IllegalArgumentException(s"unknown ranking kernel: $other")
-  }
-
-  override def prettyName: String = "graft_topk_scan"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  // null-intolerant: a null test sketch yields a null id array, which the
-  // downstream explode() drops — the same end state as the join+aggregate
-  // shape, where all-null scores left the test point with no candidate
-  // rows at all
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(StructType(fs), _))
-          if fs.length == 2 && fs(0).dataType == LongType &&
-            (fs(1).dataType match {
-              case ArrayType(DoubleType, _) => true
-              case _ => false
-            }) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        TypeCheckResult.TypeCheckFailure(
-          s"$prettyName needs (array<double>, array<struct<long, array<double>>>), got ($l, $r)")
-    }
-  }
-
-  override def nullSafeEval(sk: Any, tarr: Any): Any =
-    TopKScanIds.scan(sk.asInstanceOf[ArrayData], tarr.asInstanceOf[ArrayData],
-      k, kindCode, band)
-
-  // REAL doGenCode (not CodegenFallback): a fallback expression inside a
-  // whole-stage-codegen'd project forces INPUT_ROW materialization —
-  // the generated code rebuilds an UnsafeRow of every referenced column
-  // per output row, memcpy'ing the multi-MB broadcast sketch array once
-  // per TEST ROW (measured: 39 s executor time for a 2 s kernel).
-  // Direct codegen passes the ArrayData views, so the per-thread decode
-  // cache actually hits.
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.TopKScanIds.scan($a, $b, $k, $kindCode, $band)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): TopKScanIds =
-    copy(left = newLeft, right = newRight)
-}
-
-object TopKScanIds {
-
-  /** Per-thread decoded broadcast side: every joined row references the
-    * same broadcast bytes, so the identity check on the UnsafeArrayData's
-    * base buffer hits after the first row of each task. Thread-confined
-    * like [[Kernels]]' DTW scratch (generated code shares statics across
-    * all of the session's tasks).
-    */
-  private final class Decoded {
-    var baseObj: AnyRef = null
-    var baseOff: Long = -1L
-    var refId: AnyRef = null
-    var n: Int = -1
-    var ids: Array[Long] = null
-    var sks: Array[Array[Double]] = null
-  }
-  private val decodedTL = new ThreadLocal[Decoded] {
-    override def initialValue(): Decoded = new Decoded
-  }
-
-  private def decode(ad: ArrayData, d: Decoded): Unit = {
-    val n = ad.numElements()
-    d.n = n
-    d.ids = new Array[Long](n)
-    d.sks = new Array[Array[Double]](n)
-    var i = 0
-    while (i < n) {
-      if (!ad.isNullAt(i)) {
-        val st = ad.getStruct(i, 2)
-        if (!st.isNullAt(0) && !st.isNullAt(1)) {
-          d.ids(i) = st.getLong(0)
-          d.sks(i) = st.getArray(1).toDoubleArray()
-        }
-      }
-      i += 1
-    }
-  }
-
-  private def decoded(ad: ArrayData): Decoded = {
-    val d = decodedTL.get()
-    ad match {
-      case u: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData =>
-        if (!(d.baseObj eq u.getBaseObject) || d.baseOff != u.getBaseOffset ||
-          d.n != u.numElements()) {
-          decode(u, d)
-          d.baseObj = u.getBaseObject; d.baseOff = u.getBaseOffset; d.refId = null
-        }
-      case other =>
-        if (!(d.refId eq other)) {
-          decode(other, d)
-          d.refId = other; d.baseObj = null; d.baseOff = -1L
-        }
-    }
-    d
-  }
-
-  /** The fused scan body — called from generated code with the raw
-    * ArrayData values (no row materialization).
-    */
-  def scan(skAD: ArrayData, tarr: ArrayData, k: Int, kindCode: Int, band: Int): ArrayData = {
-    val sk = skAD.toDoubleArray()
-    val d = decoded(tarr)
-    val buf = new TopKIdsBuffer(k)
-    var i = 0
-    while (i < d.n) {
-      val t = d.sks(i)
-      if (t != null) {
-        val s = kindCode match {
-          case 0 => Kernels.manhattan(sk, t)
-          case 1 => Kernels.dtw(sk, t, band)
-          case _ => Kernels.lbKeogh(sk, t)
-        }
-        buf.insert(s, d.ids(i))
-      }
-      i += 1
-    }
-    ArrayData.toArrayData(buf.sortedIds())
-  }
-}
-
 case class BoundedTopKIdsAgg(
     scoreChild: Expression,
     idChild: Expression,

@@ -96,16 +96,21 @@ object GraftFunctions {
       (es: Seq[Expression]) =>
         BoundedTopKIdsAgg(es(0), es(1), intArg(es(2), "k"), emitScores = true),
       "graft_topk_scores(score, id, k) - scores of the k smallest (score, id) pairs, as array<double>"),
-    ("graft_topk_scan",
+    ("graft_block_topk",
       (es: Seq[Expression]) => {
         val kind = es(3) match {
           case Literal(s: org.apache.spark.unsafe.types.UTF8String, _) => s.toString
           case other => throw new IllegalArgumentException(
             s"kind must be a string literal, got: $other")
         }
-        TopKScanIds(es(0), es(1), intArg(es(2), "k"), kind, intArg(es(4), "band"))
+        val excludeZero = es(5) match {
+          case Literal(b: Boolean, _) => b
+          case other => throw new IllegalArgumentException(
+            s"excludeZero must be a boolean literal, got: $other")
+        }
+        BlockTopK(es(0), es(1), intArg(es(2), "k"), kind, intArg(es(4), "param"), excludeZero)
       },
-      "graft_topk_scan(sk, trainArr, k, kind, band) - ids of the k best-ranked broadcast train entries for one test sketch"),
+      "graft_block_topk(series, block, k, kind, param, excludeZero) - the k nearest entries of a train block array<struct<id, series, ...>> as array<struct<dist, id, ...>>"),
     ("graft_topk_pairs",
       (es: Seq[Expression]) =>
         BoundedTopKIdsAgg(es(0), es(1), intArg(es(2), "k"), emitPairs = true),

@@ -6,20 +6,31 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Structured Streaming surface: classify an unbounded stream of series
-  * against a static (broadcast) train set, plus windowed event analytics.
+  * against a static train set, plus windowed event analytics.
   *
   * The reference is batch-only (SURVEY §2.7); this is the natural
-  * extension of its Model 2 — the broadcast train set is exactly the
-  * static side Structured Streaming joins support, so [[Knn.classify1NN]]
-  * and [[Knn.classify]] compose with a streaming test side unchanged
-  * (stream-static joins are stateless; the per-microbatch plan is the
-  * same broadcast cross join + aggregation).
+  * extension of its Model 2 — the static train side is packed into
+  * blocks once, when the query is defined, and every micro-batch scans
+  * them ([[Knn.classify1NN]] and [[Knn.classify]] compose with a
+  * streaming test side unchanged).
   */
 object StreamingClassify {
 
   /** Attach a streaming test frame (test_id, test_series) to a static
     * train frame: emits (test_id, predicted_label, min_distance) per
-    * arriving series. 1-NN (Model-2 semantics); stateless, append-mode.
+    * arriving series. 1-NN (Model-2 semantics).
+    *
+    * STATELESS when the train side fits one block (its measured size is
+    * within the broadcast cap, unpruned distance): each micro-batch is a
+    * map over its test rows — no aggregate, no state store — so any
+    * output mode that admits a stateless query (append, update) works.
+    * A train side spanning several blocks, or the prune cascade, merges
+    * per-block lists in a streaming aggregate: a stateful query (update
+    * or complete mode), one state entry per test_id.
+    *
+    * The packed train blocks are a graft-owned persist made when this is
+    * called; after stopping the query, `Materialize.releaseOwned(result)`
+    * frees them.
     */
   def classifyStream1NN(trainStatic: DataFrame, testStream: DataFrame, p: KnnParams): DataFrame =
     Knn.classify1NN(trainStatic, testStream, p)

@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.SeriesFunctions
 import graft.operators.BoundedTopKByScore
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 
 /** The native TypedImperativeAggregate bounded top-k vs an in-memory
@@ -72,60 +73,101 @@ class AggregatesSpec extends SparkTestBase {
     assert(viaPairs === viaTwo)
   }
 
-  test("graft_topk_scan == pair-join + graft_topk_ids (every kernel, ties, nulls)") {
-    // the fused broadcast-path scan (r22) must select exactly what the
-    // join + heap-aggregate shape selected: same kernels, same
-    // (score, id) total order. Fixture includes duplicate sketches
-    // (score ties -> id tie-break), a null train sketch (skipped), and
-    // a null TEST sketch (null out, dropped by explode downstream).
+  test("graft_block_topk == pair distance + row_number (all kernels and edge cases)") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.types._
+    // the block scan must return exactly the reference pair formulation's
+    // top-k (a per-pair distance + row_number over (dist, train_id)):
+    // same kernels, same order, same null and zero-distance handling —
+    // every kernel, exclusion on and off, ties, NaN, -0.0, null series,
+    // null struct, null label, unequal lengths, with codegen on and off.
+    // Int ids and string labels: the scan keeps the input types.
     val rnd2 = new scala.util.Random(7)
-    val trainRows: Seq[(Long, Array[Double])] =
-      (1L to 60L).map { i =>
-        // duplicates every 10th id: exact score ties across distinct ids
-        val seed = (i % 10).toInt
-        i -> Array.tabulate(12)(t => math.sin(t * 0.7 + seed) + seed * 0.1)
-      }
+    def series(i: Int, len: Int): Array[Double] =
+      Array.tabulate(len)(t => math.sin(t * 0.7 + (i % 10)) + (i % 10) * 0.1)
+    val trainRows: Seq[(Int, Array[Double], String)] =
+      (1 to 60).map { i =>
+        // every 10th id repeats a series: exact distance ties across ids
+        val len = if (i % 7 == 0) 9 else 12 // unequal lengths
+        (i, series(i, len), if (i == 13) null else s"c${i % 4}") // a null label
+      } ++ Seq(
+        (61, Array.fill(12)(-0.0), "zero"),               // -0.0 elements
+        (62, Array.fill(12)(Double.NaN), "nan"),          // NaN distances
+        (63, null.asInstanceOf[Array[Double]], "none"))   // null series: skipped
     val testRows: Seq[(Long, Array[Double])] =
-      (101L to 115L).map { i =>
-        i -> Array.tabulate(12)(t => math.sin(t * 0.7) + rnd2.nextGaussian() * 0.2)
-      }
-    val train = trainRows.toDF("train_id", "tsk")
-    val test = testRows.toDF("test_id", "sk")
-    val k = 7
-    for ((kind, band) <- Seq(("manhattan", -1), ("dtw", 2), ("lb_keogh", -1))) {
-      val scoreExpr = kind match {
-        case "manhattan" => SeriesFunctions.manhattan(col("sk"), col("tsk"))
-        case "dtw"       => SeriesFunctions.dtw(col("sk"), col("tsk"), band)
-        case _           => SeriesFunctions.lbKeogh(col("sk"), col("tsk"))
-      }
-      val viaAgg = test.crossJoin(train)
-        .select(col("test_id"), col("train_id"), scoreExpr.as("score"))
-        .groupBy(col("test_id"))
-        .agg(SeriesFunctions.topkIds(col("score"), col("train_id"), k).as("ids"))
-        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
-      val tarr = train.agg(
-        collect_list(struct(col("train_id"), col("tsk"))).as("tarr"))
-      val viaScan = test.crossJoin(broadcast(tarr))
+      (101L to 112L).map(i => i -> Array.tabulate(12)(t => math.sin(t * 0.7) + rnd2.nextGaussian() * 0.2)) ++
+        Seq(
+          113L -> series(5, 12),               // an exact zero-distance self match
+          114L -> Array.fill(12)(0.0),         // ties 0.0 with the -0.0 entry
+          115L -> null.asInstanceOf[Array[Double]]) // null test series: no neighbors
+    val train = trainRows.toDF("train_id", "train_series", "label")
+    val test = testRows.toDF("test_id", "test_series")
+    val entry = struct(col("train_id"), col("train_series"), col("label"))
+    // a null block entry (null struct) must be skipped
+    val block = train.agg(collect_list(entry).as("block"))
+      .select(concat(col("block"),
+        array(lit(null).cast(train.select(entry).schema.head.dataType))).as("block"))
+    def bits(d: Double): Long = java.lang.Double.doubleToLongBits(d)
+    val kernels = Seq[(String, Int, (Column, Column) => Column)](
+      ("euclidean", -1, SeriesFunctions.euclidean),
+      ("sqdist", -1, SeriesFunctions.sqdist),
+      ("manhattan", -1, SeriesFunctions.manhattan),
+      ("cosine", -1, (a, b) => lit(1.0) - SeriesFunctions.cosine(a, b)),
+      ("dtw", 2, (a, b) => SeriesFunctions.dtw(a, b, 2)),
+      ("fastdtw", 1, (a, b) => SeriesFunctions.fastdtw(a, b, 1)),
+      ("lb_keogh", -1, (a, b) => SeriesFunctions.lbKeogh(SeriesFunctions.envelope(a, 2), b)))
+    def run(): Unit = for ((kind, param, dist) <- kernels; exclude <- Seq(true, false); k <- Seq(1, 4)) {
+      val w = Window.partitionBy(col("test_id")).orderBy(col("dist"), col("train_id"))
+      val pairs = test.crossJoin(train)
+        .select(col("test_id"), col("train_id"), col("label"),
+          dist(col("test_series"), col("train_series")).as("dist"))
+      val reference = (if (exclude) pairs.filter(col("dist") =!= 0.0)
+          else pairs.filter(col("dist").isNotNull))
+        .withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
+        .collect().groupBy(_.getLong(0)).map { case (t, rs) =>
+          t -> rs.sortBy(_.getInt(4)).map(r => (bits(r.getDouble(3)), r.getInt(1), r.getString(2))).toSeq
+        }
+      val probe = if (kind == "lb_keogh") SeriesFunctions.envelope(col("test_series"), 2)
+        else col("test_series")
+      val scanned = test.crossJoin(broadcast(block))
         .select(col("test_id"),
-          SeriesFunctions.topkScan(col("sk"), col("tarr"), k, kind, band).as("ids"))
-        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
-      assert(viaScan === viaAgg, s"kind=$kind")
+          SeriesFunctions.blockTopK(probe, col("block"), k, kind, param, exclude).as("nn"))
+      assert(scanned.schema("nn").dataType === ArrayType(StructType(Seq(
+        StructField("dist", DoubleType, nullable = false),
+        StructField("train_id", IntegerType, nullable = false),
+        StructField("label", StringType, nullable = true))), containsNull = false))
+      val got = scanned.collect().filter(r => !r.isNullAt(1) && r.getSeq[Row](1).nonEmpty)
+        .map(r => r.getLong(0) -> r.getSeq[Row](1).map(n =>
+          (bits(n.getDouble(0)), n.getInt(1), n.getString(2))).toSeq).toMap
+      assert(got === reference, s"kind=$kind exclude=$exclude k=$k")
     }
-    // null train sketch entries are skipped exactly like null scores in
-    // the aggregate; a null test sketch nulls the output array
-    val trainWithNull = (trainRows.map { case (i, a) => (i, a) } :+
-      (999L, null.asInstanceOf[Array[Double]])).toDF("train_id", "tsk")
-    val tarrN = trainWithNull.agg(
-      collect_list(struct(col("train_id"), col("tsk"))).as("tarr"))
-    val gotN = test.limit(1).crossJoin(broadcast(tarrN))
-      .select(SeriesFunctions.topkScan(col("sk"), col("tarr"), 100, "manhattan", -1).as("ids"))
-      .collect().head.getSeq[Long](0)
-    assert(gotN.size === 60 && !gotN.contains(999L))
-    val nullTest = Seq((1L, null.asInstanceOf[Array[Double]])).toDF("test_id", "sk")
-    val gotNull = nullTest.crossJoin(broadcast(tarrN))
-      .select(SeriesFunctions.topkScan(col("sk"), col("tarr"), 5, "manhattan", -1).as("ids"))
-      .collect().head
-    assert(gotNull.isNullAt(0))
+    run()
+    for ((conf, value) <- Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")) {
+      spark.conf.set(conf, value)
+      try run() finally spark.conf.unset(conf)
+    }
+  }
+
+  test("graft_block_topk output owns its memory: a reused block buffer leaves it intact") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, UnsafeProjection}
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types._
+    import org.apache.spark.unsafe.types.UTF8String
+    val entry = StructType(Seq(StructField("train_id", IntegerType),
+      StructField("train_series", ArrayType(DoubleType)), StructField("label", StringType)))
+    // an UnsafeProjection reuses its output buffer, like the row buffers a
+    // partitioned plan hands the scan: the second block overwrites the first
+    val proj = UnsafeProjection.create(StructType(Seq(StructField("block", ArrayType(entry)))))
+    def block(label: String) = proj(InternalRow(new GenericArrayData(Array[Any](InternalRow(
+      1, UnsafeArrayData.fromPrimitiveArray(Array(0.0, 1.0)), UTF8String.fromString(label))))))
+      .getArray(0)
+    val scanner = new graft.functions.BlockScanner(1, 0, -1, false, entry.fields.map(_.dataType))
+    val out = scanner.scan(UnsafeArrayData.fromPrimitiveArray(Array(0.0, 0.0)), block("first"))
+    block("other")
+    assert(out.getStruct(0, 3).getUTF8String(2).toString === "first")
+    assert(out.getStruct(0, 3).getInt(1) === 1)
   }
 
   test("heap selection ties -0.0 with 0.0 like a window sort (id breaks the tie)") {

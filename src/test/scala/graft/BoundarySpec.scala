@@ -167,4 +167,39 @@ class BoundarySpec extends SparkTestBase {
       .map(r => (r.getAs[Number]("rank").longValue, r.getAs[Long]("item_id")))
     assert(got.toSeq === Seq((1L, 30L), (2L, 10L)))
   }
+
+  // Knn's one-block/many-block branch: `measured <= cap` packs ONE block
+  test("knn: a train side measured EXACTLY at the broadcast cap packs one block; " +
+      "one byte less packs several — same neighbors and predictions") {
+    import graft.core.KnnParams
+    import graft.operators.Knn
+    val train = spark.range(60).select(col("id").as("train_id"),
+      call_function("graft_har_series", col("id"), lit(24)).as("train_series"),
+      pmod(col("id"), lit(3)).cast("double").as("label")).localCheckpoint()
+    val test = spark.range(15).select((col("id") + 1000).as("test_id"),
+      call_function("graft_har_series", col("id") + 1000, lit(24)).as("test_series"))
+    val trainSel = train.select("train_id", "train_series", "label")
+    val measured = Knn.measuredBytes(trainSel).get.toLong
+    val p = KnnParams(k = 3, distance = "euclidean")
+    def run(cap: Long): (Boolean, Set[Seq[Any]], Set[Seq[Any]]) = {
+      spark.conf.set("spark.graft.knn.broadcastFloor", cap.toString)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", cap.toString)
+      try (Knn.oneBlock(trainSel, p),
+        Knn.neighbors(train, test, p).collect().map(_.toSeq).toSet,
+        Knn.classify(train, test, p).collect().map(_.toSeq).toSet)
+      finally {
+        spark.conf.unset("spark.graft.knn.broadcastFloor")
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      }
+    }
+    try {
+      val (oneAt, nAt, cAt) = run(measured)
+      val (oneBelow, nBelow, cBelow) = run(measured - 1)
+      assert(oneAt, s"measured $measured == cap must pack one block")
+      assert(!oneBelow, s"measured $measured > cap ${measured - 1} must pack several blocks")
+      assert(nAt.size === 45)
+      assert(nBelow === nAt)
+      assert(cBelow === cAt)
+    } finally graft.core.Materialize.releaseCheckpoint(train)
+  }
 }

@@ -178,4 +178,32 @@ class KernelsSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("in-place kernels (ArrayData second operand) are bit-identical to the array kernels") {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    val rnd = new scala.util.Random(17)
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    def draw(): Array[Double] = Array.fill(1 + rnd.nextInt(20)) {
+      rnd.nextInt(12) match {
+        case 0 => Double.NaN
+        case 1 => -0.0
+        case 2 => 0.0
+        case _ => rnd.nextGaussian() * 3
+      }
+    }
+    for (_ <- 1 to 400) {
+      val a = draw(); val b = draw() // unequal lengths most of the time
+      for (bd <- Seq(UnsafeArrayData.fromPrimitiveArray(b), new GenericArrayData(b.map(x => x: Any)))) {
+        assert(bits(Kernels.sqdist(a, bd)) === bits(Kernels.sqdist(a, b)))
+        assert(bits(Kernels.euclidean(a, bd)) === bits(Kernels.euclidean(a, b)))
+        assert(bits(Kernels.manhattan(a, bd)) === bits(Kernels.manhattan(a, b)))
+        assert(bits(Kernels.cosine(a, Kernels.norm(a), bd)) === bits(Kernels.cosine(a, b)))
+        for (band <- Seq(-1, 0, 3))
+          assert(bits(Kernels.dtw(a, bd, band)) === bits(Kernels.dtw(a, b, band)))
+        val env = Kernels.envelope(a, 2)
+        assert(bits(Kernels.lbKeogh(env, bd)) === bits(Kernels.lbKeogh(env, b)))
+      }
+    }
+  }
 }

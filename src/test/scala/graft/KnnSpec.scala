@@ -284,4 +284,66 @@ class KnnSpec extends SparkTestBase {
     assert(nnAll.getLong(0) === 1L)
     assert(nnAll.getDouble(1) === 0.0)
   }
+
+  /** Every KNN entry point's rows for one configuration. */
+  private def knnOutputs(p: KnnParams): Map[String, Set[Seq[Any]]] = {
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val pruned = KnnParams(k = 5, distance = "dtw", band = 4, lbPruning = true,
+      pruneRanker = "paa_dtw", coarsenFactor = 2, candidateFactor = 20,
+      strategy = p.strategy)
+    Map(
+      "neighbors" -> rows(Knn.neighbors(trainDf, testDf, p.copy(k = 5))),
+      "classify" -> rows(Knn.classify(trainDf, testDf, p.copy(k = 5))),
+      "classify1NN" -> rows(Knn.classify1NN(trainDf, testDf, p)),
+      "sweepClassify" -> rows(Knn.sweepClassify(trainDf, testDf, p, Seq(1, 3, 5))),
+      "pruned neighbors" -> rows(Knn.neighbors(trainDf, testDf, pruned)),
+      "pruned classify1NN" -> rows(Knn.classify1NN(trainDf, testDf, pruned.copy(k = 1))))
+  }
+
+  test("many blocks == one block: every entry point, both strategies, rows identical") {
+    val p = KnnParams(distance = "euclidean")
+    val trainSel = trainDf.select("train_id", "train_series", "label")
+    assert(Knn.oneBlock(trainSel, p), "fixture premise: the default cap packs ONE block")
+    val oneBlock = knnOutputs(p)
+    // a 1 KB cap: the same train side (~7 KB of rows, a ~1.3 KB
+    // LocalRelation estimate) no longer fits one block
+    spark.conf.set("spark.graft.knn.broadcastFloor", "1")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1k")
+    try for (strategy <- Seq("broadcast", "cartesian", "auto")) {
+      val ps = p.copy(strategy = strategy)
+      assert(!Knn.oneBlock(trainSel, ps), s"strategy=$strategy")
+      val blockBytes = Knn.trainBlocks(trainSel, one = false, ps).queryExecution.toRdd
+        .map(_.asInstanceOf[org.apache.spark.sql.catalyst.expressions.UnsafeRow].getSizeInBytes)
+        .collect()
+      assert(blockBytes.length >= 3, s"strategy=$strategy packed ${blockBytes.length} blocks")
+      assert(blockBytes.max <= 1024, s"a block row passed the 1 KB cap: ${blockBytes.max}")
+      val many = knnOutputs(ps)
+      for ((name, rows) <- oneBlock)
+        assert(many(name) === rows, s"$name diverges under strategy=$strategy with many blocks")
+    } finally {
+      spark.conf.unset("spark.graft.knn.broadcastFloor")
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
+  }
+
+  test("int train_id and string label keep their types and values under both strategies") {
+    // many blocks under cartesian: block rows reach the scan through
+    // CartesianProduct's reused buffers, so string labels must be copied
+    val train = trainData.map { case (i, s, l) => (i.toInt, s, s"label-${l.toInt}-$i") }
+      .toDF("train_id", "train_series", "label")
+    val expected = testData.flatMap { case (tid, ts) =>
+      trainData.map { case (id, s, l) => (Kernels.euclidean(ts, s), id.toInt, s"label-${l.toInt}-$id") }
+        .filter(_._1 != 0.0).sortBy(t => (t._1, t._2)).take(3).zipWithIndex
+        .map { case ((d, id, l), r) => (tid, id, l, d, r + 1) }
+    }.toSet
+    for (strategy <- Seq("cartesian", "broadcast")) {
+      val n = Knn.neighbors(train, testDf, KnnParams(k = 3, distance = "euclidean",
+        strategy = strategy))
+      assert(n.schema("train_id").dataType === org.apache.spark.sql.types.IntegerType)
+      assert(n.schema("label").dataType === org.apache.spark.sql.types.StringType)
+      val got = n.collect().map(r =>
+        (r.getLong(0), r.getInt(1), r.getString(2), r.getDouble(3), r.getInt(4))).toSet
+      assert(got === expected, s"strategy=$strategy")
+    }
+  }
 }

@@ -290,6 +290,47 @@ class PlanShapeSpec extends SparkTestBase {
     }
   }
 
+  test("stream-static 1-NN over a one-block train runs stateless and equals batch classify1NN") {
+    import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+    import org.apache.spark.sql.execution.streaming.operators.stateful.{StateStoreRestoreExec, StateStoreSaveExec}
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val train = synth(300, 0, "train_id", "train_series").localCheckpoint()
+    try {
+      val p = KnnParams(distance = "euclidean")
+      assert(Knn.oneBlock(train.select("train_id", "train_series", "label"), p),
+        "fixture premise: the train side fits one block")
+      val stream = MemoryStream[Long]
+      def testSide(ids: DataFrame) = ids.select(col("value").as("test_id"),
+        call_function("graft_har_series", col("value") + 100000, lit(561)).as("test_series"))
+      val qname = s"psl_${System.nanoTime()}"
+      val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val out = graft.streaming.StreamingClassify.classifyStream1NN(train, testSide(stream.toDF()), p)
+      // the static block is packed once, at definition, as one owned persist
+      val packed = spark.sparkContext.getPersistentRDDs.keySet.toSet.diff(persistedBefore)
+      assert(packed.size === 1, s"expected one persisted block RDD, got $packed")
+      val q = out.writeStream.outputMode("update").format("memory").queryName(qname).start()
+      try {
+        stream.addData(1L to 20L: _*)
+        q.processAllAvailable()
+        stream.addData(21L to 30L: _*)
+        q.processAllAvailable()
+        val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+        val stateful = plan.collect {
+          case s: StateStoreSaveExec => s
+          case r: StateStoreRestoreExec => r
+        }
+        assert(stateful.isEmpty, s"one-block stream must be stateless, plan:\n$plan")
+      } finally q.stop()
+      Materialize.releaseOwned(out)
+      assert(spark.sparkContext.getPersistentRDDs.keySet.toSet.intersect(packed).isEmpty,
+        "releaseOwned on the stream result must free the packed block")
+      val batch = Knn.classify1NN(train, testSide((1L to 30L).toDF("value")), p)
+      assert(spark.table(qname).collect().map(_.toSeq).toSet ===
+        batch.collect().map(_.toSeq).toSet)
+    } finally Materialize.releaseCheckpoint(train)
+  }
+
   test("partitioned layout: a partition-column filter prunes at the directory level") {
     val stage = java.nio.file.Files.createTempDirectory("graft_part_spec")
     val ev = spark.range(1000).select(
