@@ -1,24 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
-
-/** Counts scheduler events between `reset()`s (SPARK_GRAFT_JOBS=1). */
-private[graft] final class BenchListener extends SparkListener {
-  val jobs = new AtomicLong; val stages = new AtomicLong; val tasks = new AtomicLong
-  def reset(): Unit = { jobs.set(0); stages.set(0); tasks.set(0) }
-  override def onJobStart(e: SparkListenerJobStart): Unit = {
-    jobs.incrementAndGet()
-    if (sys.env.get("SPARK_GRAFT_JOBS").contains("2")) {
-      val names = e.stageInfos.map(si => s"${si.stageId}:${si.name.takeWhile(_ != '(').trim}:${si.numTasks}").mkString(" | ")
-      System.err.println(s"[jobsite] job=${e.jobId} $names")
-    }
-  }
-  override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = stages.incrementAndGet()
-  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = tasks.incrementAndGet()
-}
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Each query is forced through a `noop` write so
@@ -577,18 +559,12 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.sql.adaptive.enabled",
         sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     // warmup: JIT + codegen + parquet footer caches, so the first timed
     // query doesn't absorb cold-start
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
@@ -617,7 +593,7 @@ object Bench {
     // track local time (NOTES_r4) — so the artifact itself must let a
     // reader separate co-tenant inflation from engine cost.
     // SPARK_GRAFT_JOBS=2 additionally prints per-job stage names (stderr).
-    val listener = new BenchListener
+    val listener = new CounterListener
     spark.sparkContext.addSparkListener(listener)
     // Median-of-N per query (default 3): a single timed run cannot
     // distinguish an engine regression from co-tenant scheduler stall —

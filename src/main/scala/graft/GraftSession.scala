@@ -6,8 +6,10 @@ import org.apache.spark.sql.SparkSession
 /** Public entry point: a SparkSession builder pre-configured for the graft
   * engine — extensions installed (native functions + optimizer rules) and
   * the confs the engine assumes (AQE on, UTC, nanos-tolerant parquet
-  * reads). Use [[graft.functions.GraftFunctions.register]] instead when
-  * attaching to an already-built session.
+  * reads). Every graft main, tool and test builds its sessions here and
+  * adds only deployment settings (`SessionBuilderSpec` fails on any other
+  * builder). Use [[graft.functions.GraftFunctions.register]] instead when
+  * attaching to a session graft did not build.
   */
 object GraftSession {
 

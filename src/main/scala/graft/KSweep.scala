@@ -3,7 +3,6 @@ package graft
 import graft.core.KnnParams
 import graft.operators.{Evaluation, Knn}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
 
 /** Hyper-parameter sweep driver — the reference ran k in {5,10,20,50,70}
   * as manual notebook cells, one table + accuracy per k
@@ -30,15 +29,10 @@ object KSweep {
     val distances = args.lift(1).getOrElse("euclidean,dtw").split(",").toSeq
     val ks = args.lift(2).getOrElse("1,5,10,20").split(",").map(_.toInt).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
 
     val (train, test, truth) =
       if (harMode) {

@@ -1,10 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-
 /** Noise-immune scale census: per-query BYTES moved at two scale factors.
   *
   * Wall-clock linearity (the tier100 census) shares the host with
@@ -49,24 +44,6 @@ import org.apache.spark.sql.SparkSession
   * records the table as BYTESCHECK_r{N}.json.
   */
 object ShuffleCensus {
-
-  private final class BytesListener extends SparkListener {
-    val input = new AtomicLong
-    val shuffleWrite = new AtomicLong
-    val shuffleRead = new AtomicLong
-    val spill = new AtomicLong
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        input.addAndGet(m.inputMetrics.bytesRead)
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        spill.addAndGet(m.diskBytesSpilled)
-        ()
-      }
-    }
-    def reset(): Unit = Seq(input, shuffleWrite, shuffleRead, spill).foreach(_.set(0L))
-  }
 
   private val streaming = Set(
     "q67_stream_window", "q68_stream_dedup", "q69_stream_state",
@@ -120,25 +97,17 @@ object ShuffleCensus {
       case Array(a, b) => (a, b)
       case _ => ("/root/testdata/sf0.01", "/root/testdata/sf0.1")
     }
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-shuffle-census")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.builder("local[8]", 8)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val listener = new BytesListener
+    val listener = new CounterListener
     spark.sparkContext.addSparkListener(listener)
 
     val names = SparkEntry.queries.keys.toSeq.sorted.filterNot(streaming)
 
     def measure(dir: String): Map[String, (Long, Long, Long, Long)] = {
       val s = spark.newSession()
-      graft.functions.GraftFunctions.register(s)
       try names.map { n =>
         org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
         listener.reset()

@@ -34,6 +34,13 @@ object SparkEntry {
     * cap: the session's shuffle-partition setting, exactly where the
     * orderBy exchange would start pre-AQE), so the kernel pass runs wide
     * at EVERY scale instead of only where the input is already big.
+    *
+    * Cost: `repartitionByRange` adds a RangePartitioner sampling job,
+    * which re-runs the child subtree once per query build, before the
+    * shuffle that sorts it. The sample carries whole rows, so the job's
+    * cost grows with the input's width (for [[docsSorted]], the text
+    * column). It is a net win at the measured scales; sampling a
+    * key-only projection is the fix if it shows up at larger tiers.
     */
   private def sortedWide(df: DataFrame, keys: Seq[String]): DataFrame = {
     val s = df.sparkSession

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -18,22 +17,13 @@ object Verify {
         require(i > 0, s"SPARK_GRAFT_CONF entry '$kv' is not k=v")
         (kv.take(i), kv.drop(i + 1))
       }
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      // legacy flag for TIMESTAMP(NANOS) events data (rounds <= 9); the
-      // current testdata ships micros and normalizes via EventTime.nanos
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val builder = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.ui.enabled", "false")
     val spark = extraConf.foldLeft(builder) { case (b, (k, v)) =>
       System.err.println(s"[verify] conf override: $k=$v")
       b.config(k, v)
     }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q12,q28 dumps a name-prefix subset (iteration aid,
     // same contract as Bench; the driver never sets it so official runs

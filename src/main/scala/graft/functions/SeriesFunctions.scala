@@ -51,11 +51,6 @@ object SeriesFunctions {
     */
   def topkIds(score: Column, id: Column, k: Int): Column =
     call_function("graft_topk_ids", score, id, lit(k))
-  /** The k smallest scores per group, sorted ascending — bounded-buffer
-    * order statistics without an unbounded collect_list.
-    */
-  def topkScores(score: Column, id: Column, k: Int): Column =
-    call_function("graft_topk_scores", score, id, lit(k))
   /** Block-scan top-k (see [[graft.functions.BlockTopK]]): the k nearest
     * entries of a train block `array<struct<train_id, train_series, ...>>`
     * to one test series, as `array<struct<dist, train_id, ...>>` sorted

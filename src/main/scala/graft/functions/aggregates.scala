@@ -79,9 +79,6 @@ final class TopKIdsBuffer(val k: Int) {
   /** ids sorted ascending by (score, id) — deterministic output order. */
   def sortedIds(): Array[Long] = sortedOrder().map(ids(_))
 
-  /** scores sorted ascending by (score, id). */
-  def sortedScores(): Array[Double] = sortedOrder().map(scores(_))
-
   /** (score, id) pairs sorted ascending by (score, id). */
   def sortedPairs(): Array[(Double, Long)] =
     sortedOrder().map(i => (scores(i), ids(i)))
@@ -240,13 +237,13 @@ final class BlockScanner(k: Int, kind: Int, param: Int, excludeZero: Boolean,
 /** Native bounded top-k-by-score aggregate: collects the ids of the k
   * smallest (score, id) pairs per group as array<long>.
   *
-  * This is the third incarnation of the reference's two-phase heap
-  * (`heapq.nsmallest` per partition then after the shuffle,
-  * `Team11-Project.py:180`/`:195`): the window-rank route and the typed
-  * Dataset `Aggregator` ([[graft.operators.BoundedTopKByScore]]) keep the
-  * same semantics, but this one runs as a Catalyst
+  * The reference's two-phase heap (`heapq.nsmallest` per partition then
+  * after the shuffle, `Team11-Project.py:180`/`:195`) as a Catalyst
   * `TypedImperativeAggregate` — no Scala tuple boxing and no Kryo buffer
   * encoding per row, with partial state serialized as packed primitives.
+  * The typed Dataset `Aggregator` [[graft.operators.BoundedTopKByScore]]
+  * keeps the same semantics and is the reference AggregatesSpec checks
+  * it against.
   * Used by the KNN prune cascade to merge per-block candidate lists
   * when the train side spans several blocks.
   */
@@ -254,18 +251,14 @@ case class BoundedTopKIdsAgg(
     scoreChild: Expression,
     idChild: Expression,
     k: Int,
-    emitScores: Boolean = false,
     emitPairs: Boolean = false,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[TopKIdsBuffer] with ImplicitCastInputTypes {
   require(k >= 1, "k must be >= 1")
-  require(!(emitScores && emitPairs), "emitScores and emitPairs are exclusive")
 
   override def prettyName: String =
-    if (emitPairs) "graft_topk_pairs"
-    else if (emitScores) "graft_topk_scores"
-    else "graft_topk_ids"
+    if (emitPairs) "graft_topk_pairs" else "graft_topk_ids"
   override def children: Seq[Expression] = Seq(scoreChild, idChild)
   // analysis-time coercion: an INT id or FLOAT score would otherwise
   // pass analysis and ClassCastException per task at execution
@@ -276,7 +269,6 @@ case class BoundedTopKIdsAgg(
       ArrayType(StructType(Seq(
         StructField("score", DoubleType, nullable = false),
         StructField("id", LongType, nullable = false))), containsNull = false)
-    else if (emitScores) ArrayType(DoubleType, containsNull = false)
     else ArrayType(LongType, containsNull = false)
 
   override def createAggregationBuffer(): TopKIdsBuffer = new TopKIdsBuffer(k)
@@ -301,7 +293,6 @@ case class BoundedTopKIdsAgg(
         buf.sortedPairs().map { case (s, id) =>
           InternalRow(s, id): Any
         })
-    else if (emitScores) ArrayData.toArrayData(buf.sortedScores())
     else ArrayData.toArrayData(buf.sortedIds())
 
   override def serialize(buf: TopKIdsBuffer): Array[Byte] = {

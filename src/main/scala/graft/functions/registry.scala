@@ -8,10 +8,11 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 /** Function registration for graft's custom Catalyst expressions.
   *
   * Two entry points:
-  *  - [[GraftExtensions]]: `SparkSession.builder().withExtensions(new
-  *    GraftExtensions)` — the clean path for production sessions.
-  *  - [[GraftFunctions.register]]: post-hoc registration on an existing
-  *    session (used by tests and the driver harness).
+  *  - [[GraftExtensions]], which [[graft.GraftSession.builder]] installs
+  *    on every session graft builds (and on their `newSession()`s).
+  *  - [[GraftFunctions.register]]: post-hoc registration on a session
+  *    graft did not build (library entry points that accept any
+  *    session's DataFrames call it, idempotently).
   *
   * After registration the functions are usable from SQL and from
   * `functions.call_function`.
@@ -92,10 +93,6 @@ object GraftFunctions {
       (es: Seq[Expression]) =>
         BoundedTopKIdsAgg(es(0), es(1), intArg(es(2), "k")),
       "graft_topk_ids(score, id, k) - ids of the k smallest (score, id) pairs, as array<long>"),
-    ("graft_topk_scores",
-      (es: Seq[Expression]) =>
-        BoundedTopKIdsAgg(es(0), es(1), intArg(es(2), "k"), emitScores = true),
-      "graft_topk_scores(score, id, k) - scores of the k smallest (score, id) pairs, as array<double>"),
     ("graft_block_topk",
       (es: Seq[Expression]) => {
         val kind = es(3) match {

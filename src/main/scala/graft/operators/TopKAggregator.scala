@@ -3,27 +3,20 @@ package graft.operators
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 
-/** Bounded top-k-by-distance aggregate — the typed-`Aggregator` twin of
+/** Bounded top-k of (score, id): the ids of the k smallest (score, id)
+  * pairs per group, as a typed Dataset `Aggregator` — the typed twin of
   * the reference's two-phase heap (`heapq.nsmallest` per partition at
   * `Team11-Project.py:180`/`:361`, then again after the shuffle at
   * `:195`/`:377`). Spark executes `reduce` as the partial (map-side)
   * phase and `merge` as the final phase, so the partial/merge structure
   * matches the reference's exactly — but declaratively.
   *
-  * The window-function route in [[Knn.neighbors]] is the default engine
-  * path (gets `WindowGroupLimit` pushdown); this aggregator is the
-  * cross-check and the building block for reuse inside other typed
-  * pipelines.
+  * No engine path runs it: it is the typed reference that AggregatesSpec
+  * checks the native `graft_topk_ids` aggregate
+  * ([[graft.functions.BoundedTopKIdsAgg]]) against.
   *
   * Buffer is a sorted array bounded at k (k is small: reference sweeps
   * 5..70), so partial state is O(k) regardless of partition size.
-  */
-/** Bounded top-k of (score, id) keeping the k smallest (score, id) pairs —
-  * the partial/merge heap used by the LB cascade, where a window-rank
-  * sort of every candidate row would dominate the plan (sorting tens of
-  * millions of slim rows to keep 8 per group). ObjectHashAggregate keeps
-  * the buffer as a live object per group; only the k-bounded state
-  * crosses the shuffle.
   */
 class BoundedTopKByScore(k: Int)
     extends Aggregator[(Long, Long, Double), Array[(Double, Long)], Array[Long]] {

@@ -54,23 +54,19 @@ class AggregatesSpec extends SparkTestBase {
     assert(got === Seq(11L, 10L))
   }
 
-  test("graft_topk_pairs: one heap emits the same (score, id) rows as ids+scores") {
+  test("graft_topk_pairs matches the in-memory (score, id) oracle") {
     val df = rows.toDF("gid", "id", "score")
-    val k = 6
-    val viaPairs = df.groupBy(col("gid"))
-      .agg(SeriesFunctions.topkPairs(col("score"), col("id"), k).as("tk"))
-      .select(col("gid"), posexplode(col("tk")))
-      .select(col("gid"), col("pos"), col("col.score"), col("col.id"))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2), r.getLong(3)))
-      .toSet
-    val viaTwo = df.groupBy(col("gid"))
-      .agg(SeriesFunctions.topkIds(col("score"), col("id"), k).as("ids"),
-        SeriesFunctions.topkScores(col("score"), col("id"), k).as("ss"))
-      .select(col("gid"), posexplode(arrays_zip(col("ids"), col("ss"))))
-      .select(col("gid"), col("pos"), col("col.ss"), col("col.ids"))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2), r.getLong(3)))
-      .toSet
-    assert(viaPairs === viaTwo)
+    for (k <- Seq(1, 6, 32)) {
+      val got = df.groupBy(col("gid"))
+        .agg(SeriesFunctions.topkPairs(col("score"), col("id"), k).as("tk"))
+        .collect().map(r => r.getLong(0) ->
+          r.getSeq[Row](1).map(p => (p.getDouble(0), p.getLong(1))).toSeq)
+        .toMap
+      val want = rows.groupBy(_._1).map { case (g, rs) =>
+        g -> rs.map(r => (r._3, r._2)).sorted.take(k)
+      }
+      assert(got === want, s"k=$k")
+    }
   }
 
   test("graft_block_topk == pair distance + row_number (all kernels and edge cases)") {

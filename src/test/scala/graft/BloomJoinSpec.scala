@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.GraftFunctions
 import graft.operators.BloomJoin
 import org.apache.spark.sql.functions._
 
@@ -29,7 +28,6 @@ class BloomJoinSpec extends SparkTestBase {
   }
 
   test("bloom prefilter keeps every true match and prunes most non-members") {
-    GraftFunctions.register(spark)
     // probe ids 0..9999; build ids only 0..99 -> 1% true-match rate
     val probe = spark.range(10000).select(col("id").as("k"))
     val build = spark.range(100).select(col("id").as("k"))

@@ -125,7 +125,6 @@ class PlanGoldenSpec extends SparkTestBase {
   /** One pass in a fresh session; memos build in sorted-name order. */
   private lazy val current: Map[String, String] = {
     val s = spark.newSession()
-    graft.functions.GraftFunctions.register(s)
     try batchQueries.map { case (name, fn) =>
       name -> fingerprint(fn(s, sf001))
     }.toMap

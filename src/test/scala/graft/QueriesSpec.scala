@@ -15,6 +15,33 @@ class QueriesSpec extends SparkTestBase {
     val s = GraftSession.getOrCreate()
     assert(s.sql("SELECT graft_euclidean(array(0.0d,0.0d), array(3.0d,4.0d)) d")
       .head().getDouble(0) === 5.0)
+    // s is built by GraftSession.builder (TestSpark). Its newSession()s
+    // (ShuffleCensus and PlanGoldenSpec measure on them) get no register
+    // call: the confs, the functions and the optimizer rule must all come
+    // from the builder
+    val fresh = s.newSession()
+    assert(fresh.experimental.extraOptimizations.isEmpty)
+    for (x <- Seq(s, fresh)) {
+      assert(x.conf.get("spark.sql.adaptive.enabled") === "true")
+      assert(x.conf.get("spark.sql.session.timeZone") === "UTC")
+      assert(x.conf.get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold") === "65536")
+      assert(x.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    }
+    assert(fresh.sql("SELECT graft_dtw(array(0.0d, 1.0d), array(0.0d, 2.0d)) d")
+      .head().getDouble(0) === 1.0)
+    // distances 5, 4.47, 4.12, 4 from (3, 4): two rows pass 4.2
+    val filtered = fresh.range(4)
+      .selectExpr("array(cast(id AS double), 0.0d) AS a", "array(3.0d, 4.0d) AS b")
+      .where("graft_euclidean(a, b) <= 4.2")
+    val plan = filtered.queryExecution.optimizedPlan
+    val conds = plan.collect {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+    }
+    assert(conds.nonEmpty && conds.forall(c =>
+      c.exists(_.isInstanceOf[graft.functions.SquaredDistance]) &&
+        !c.exists(_.isInstanceOf[graft.functions.EuclideanDistance])), plan.toString)
+    assert(filtered.count() === 2)
+    assert(fresh.experimental.extraOptimizations.isEmpty)
   }
 
   test("oracleSql keys are a subset of queries keys") {
@@ -72,7 +99,6 @@ class QueriesSpec extends SparkTestBase {
     SparkEntry.queries("q28_ann_ivf")(spark, sf001).count()
     assert(SparkEntry.oracleSql.contains("q28_ann_ivf"))
     val s2 = spark.newSession()
-    graft.functions.GraftFunctions.register(s2)
     try {
       SparkEntry.queries("q28_ann_ivf")(s2, "/root/testdata/sf0.01").count()
       assert(!SparkEntry.oracleSql.contains("q28_ann_ivf"),

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.SparkEntry
 import org.apache.spark.SparkConf
-import org.apache.spark.sql.SparkSession
 
 /** Full 82-query oracle gate on the two-hostname standalone mini
   * cluster (round-13 directive #1 — the highest-leverage evidence gap):
@@ -52,12 +51,7 @@ object MiniClusterGate {
       else org.apache.spark.deploy.GraftMiniCluster.start(
         new SparkConf(), Seq("runsc", "vm"), cores = 4, memoryMb = 5120)
 
-    val base = SparkSession.builder().master(master)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val base = graft.GraftSession.builder(master, 8)
       .config("spark.ui.enabled", "false")
     val builder = if (localMode) base else {
       // Executor JVMs come from SPARK_HOME's launcher: this build's
@@ -83,7 +77,6 @@ object MiniClusterGate {
     }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
 
     if (!localMode) {
       // both executors must be REGISTERED (not merely requested) under

@@ -100,17 +100,11 @@ object MlClusterProbe {
       if (!pass) failed ::= name
     }
 
-    def session(master: String, extra: SparkConf => SparkConf): SparkSession = {
-      val b = SparkSession.builder().master(master)
+    def session(master: String, extra: SparkConf => SparkConf): SparkSession =
+      graft.GraftSession.builder(master, 8)
         .config(extra(new SparkConf()))
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
-      val s = b.getOrCreate()
-      graft.functions.GraftFunctions.register(s)
-      s
-    }
+        .getOrCreate()
 
     val work = java.nio.file.Files.createTempDirectory("graft_mlcluster").toString
 

@@ -1,15 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = graft.GraftSession.builder("local[8]", 8)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
     val dir = "/root/testdata/sf0.01"
     for (q <- args) {
       println(s"===== $q =====")

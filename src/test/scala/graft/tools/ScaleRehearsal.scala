@@ -199,11 +199,7 @@ object ScaleRehearsal {
           new org.apache.spark.SparkConf(), Seq("runsc", "vm"),
           cores = 2, memoryMb = 1024)
       else "local[32]"
-    val base = SparkSession.builder().master(master)
-      .config("spark.sql.shuffle.partitions", if (isSpec) 8 else 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val base = graft.GraftSession.builder(master, if (isSpec) 8 else 32)
       .config("spark.ui.enabled", "false")
     val builder = if (!isSpec) base else {
       // Executor JVMs are spawned by the in-process Worker through
@@ -243,7 +239,6 @@ object ScaleRehearsal {
     }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
     val which = if (args.isEmpty) Set("har", "dedup", "stream", "ann") else args.toSet
 
     if (which("har")) {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Standalone tier synthesizer: `reps` id-shifted copies of the sf0.1
   * tables into `dest` (the [[SuiteRehearsal.generateTier]] synth,
   * runnable without the full rehearsal — `tools/scalecheck.py`'s
@@ -16,12 +14,7 @@ object TierSynth {
     val reps = args(0).toInt
     val dest = args(1)
     val only = args.lift(2).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = graft.GraftSession.builder("local[16]", 16)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
